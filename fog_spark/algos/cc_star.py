@@ -109,8 +109,8 @@ def star_contraction_components(
         nxt = mat.checkpoint(_small_star(_large_star(cur)))
         # fixpoint: small-star output is canonical (src > dst, distinct),
         # so set equality reduces to count equality + an anti-join
-        # emptiness probe — one extra job per round, the same cost class
-        # as the engine's per-iteration stats job
+        # emptiness probe — extra jobs per round (the engine loop gets
+        # its stats from the checkpoint job instead)
         same = (
             nxt.count() == cur.count()
             and nxt.join(cur, ["src", "dst"], "left_anti").isEmpty()

@@ -98,7 +98,7 @@ class HyperBall(Algorithm):
         self.hash_fn = hash_fn
         self.default_max_iters = rounds
         # track_nf: ride the neighborhood-function estimate on the
-        # engine's per-iteration stats job (extra_stats) — one run yields
+        # engine's per-iteration stats (extra_stats) — one run yields
         # N_est at EVERY radius prefix for free (the engine also primes
         # extra_stats on the init state, giving radius 0)
         self.track_nf = track_nf
@@ -258,8 +258,8 @@ def neighborhood_function(
     estimates. Driver-side list: one float per round, not per vertex.
 
     ONE engine run (HyperBall naturally yields every radius prefix):
-    the per-radius estimate rides the engine's existing per-iteration
-    stats job via extra_stats — no extra jobs, no O(rounds^2) re-runs.
+    the per-radius estimate rides the engine's per-iteration stats via
+    extra_stats — no extra jobs, no O(rounds^2) re-runs.
     If the sketch fixpoint converges before ``rounds``, the remaining
     radii repeat the converged estimate (the ball stopped growing)."""
     algo = HyperBall(m=m, rounds=rounds, hash_fn=hash_fn, track_nf=True)

@@ -209,8 +209,8 @@ class StandardPageRank(Algorithm):
 
     def init_state(self, vertices: DataFrame, adj: DataFrame) -> DataFrame:
         # rank_0 = 1/N via a window-free scalar-subquery count — the
-        # engine's prestats job then primes self._n / self._dm before
-        # iteration 1, so no driver count() happens here
+        # engine's stats on the init state then prime self._n / self._dm
+        # before iteration 1, so no driver count() happens here
         n_total = vertices.select(F.count("*").alias("_nv"))
         srcs = adj.select(F.col("src").alias("id")).distinct()
         return (
@@ -240,10 +240,10 @@ class StandardPageRank(Algorithm):
 
     def extra_stats(self):
         # dangling mass (ranks with no out-edges, redistributed uniformly
-        # next iteration) rides the engine's per-iteration stats job — one
-        # blocking aggregation per iteration instead of two. The engine
-        # also primes it from the init/RESUME state, so a checkpointed run
-        # resumes correctly with no driver-held state.
+        # next iteration) rides the engine's per-iteration stats, which
+        # the checkpoint job gathers — no aggregation job of its own. The
+        # engine also primes it from the init/RESUME state, so a
+        # checkpointed run resumes correctly with no driver-held state.
         return {
             "dangling_mass": F.coalesce(
                 F.sum(F.when(~F.col("has_out"), F.col("rank"))), F.lit(0.0)
@@ -255,7 +255,7 @@ class StandardPageRank(Algorithm):
         self._dm = float(stats["dangling_mass"])
 
     def apply(self, state: DataFrame, gathered: DataFrame) -> DataFrame:
-        # _n/_dm are exact driver scalars from the previous stats job —
+        # _n/_dm are exact driver scalars from the previous iteration's stats —
         # folded in as literals, the apply plan is a single join+project
         # with no scalar-aggregate subtree (measured: one fewer blocking
         # job per iteration on the headline convergence benchmark).

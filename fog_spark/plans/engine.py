@@ -21,6 +21,11 @@ DataFrame plan per iteration:
   snapshots + per-partition lineage rows; intermediate iterations may use
   ``localCheckpoint`` to truncate lineage without durable I/O.
 
+One Spark action per iteration: the checkpoint (or durable state write)
+is the only job an iteration launches. The lineage message counts and
+the convergence stats are observed metrics that ride it; lineage rows
+are written on the driver (checkpoint.py).
+
 Work stealing (fog_engine.cpp:819-1011) maps to Spark task scheduling +
 AQE; *data* skew is handled structurally by the salted adjacency
 (graph.build_adjacency) — no straggler task ever owns a whole hub.
@@ -33,7 +38,8 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from fog_spark import graph as G
@@ -46,6 +52,43 @@ from fog_spark.plans.materialize import Materializer
 # <= 256 strips keeps the metric row and the codegen'd expression list
 # bounded while preserving FOG's per-strip granularity (E15)
 _LINEAGE_MAX_STRIPS = 256
+
+# observed metrics arrive through the session's listener bus after the
+# action that carried them finished; a wait this long means they never
+# will (the observed frame was not part of that action's plan)
+_OBSERVATION_TIMEOUT_S = 300.0
+
+
+def shuffle_partitions(spark: SparkSession) -> int:
+    """``spark.sql.shuffle.partitions`` as an int; a value that is not one
+    (e.g. "auto" on platforms that size shuffles themselves) falls back
+    to the default parallelism."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism
+
+
+def observed(obs: Observation, what: str) -> dict:
+    """The metrics of ``obs`` once the action that carried them has
+    finished. ``Observation.get`` blocks until the listener delivers them,
+    with no limit; this waits on the JVM future up to
+    ``_OBSERVATION_TIMEOUT_S`` and fails loudly instead of hanging."""
+    jvm = obs._jvm
+    limit = jvm.scala.concurrent.duration.FiniteDuration(
+        int(_OBSERVATION_TIMEOUT_S * 1000), jvm.java.util.concurrent.TimeUnit.MILLISECONDS
+    )
+    try:
+        jvm.scala.concurrent.Await.ready(obs._jo.future(), limit)
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() != "java.util.concurrent.TimeoutException":
+            raise
+        raise TimeoutError(
+            f"{what}: observed metrics not delivered within "
+            f"{_OBSERVATION_TIMEOUT_S:g} s; the observed frame must be "
+            "part of the checkpoint action's plan"
+        ) from None
+    return obs.get
 
 
 def scatter_join(active_state: DataFrame, adj: DataFrame) -> DataFrame:
@@ -108,17 +151,18 @@ class Algorithm:
 
     def extra_stats(self) -> dict[str, Any]:
         """Extra aggregate Columns (name -> Column over state rows) the
-        engine folds into its per-iteration stats job. Lets an algorithm
-        read a global scalar (e.g. PageRank's dangling mass) without
-        issuing its OWN blocking aggregation job inside apply() — the
-        stats job runs anyway, so riding along is free."""
+        engine folds into its per-iteration stats. Lets an algorithm read
+        a global scalar (e.g. PageRank's dangling mass) without issuing
+        its OWN blocking aggregation job inside apply(): the stats are
+        metrics observed on the new state, gathered by the iteration's
+        checkpoint job, so riding along is free."""
         return {}
 
     def set_stats(self, stats: dict[str, Any]) -> None:
-        """Called by the engine after every stats job (and once on the
-        init/resume state when extra_stats() is non-empty), BEFORE the
-        next iteration's plans are built — apply() may fold these values
-        in as literals."""
+        """Called by the engine after every iteration's checkpoint (and
+        once on the init/resume state when extra_stats() is non-empty),
+        BEFORE the next iteration's plans are built — apply() may fold
+        these values in as literals."""
         return None
 
 
@@ -172,7 +216,7 @@ class ScatterGatherEngine:
         # that hash(src, salt) does not satisfy, re-shuffling the
         # adjacency every iteration.
         hub_salts = self._hub_salts(e) if self.hub_cap is not None else None
-        n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        n = shuffle_partitions(self.spark)
         # pin keys derive from hub_salts itself, never from the degree
         # check alone: a degree-hub whose duplicate dsts collapse into a
         # single salt chunk has no expansion row, and pinning such an
@@ -324,8 +368,7 @@ class ScatterGatherEngine:
         # FOG's per-strip edge metric): one job, reused every iteration.
         # strip = partition_id % n_strips; below the cap (always, in
         # local mode) strips ARE partitions.
-        nparts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        n_strips = min(nparts, _LINEAGE_MAX_STRIPS)
+        n_strips = min(shuffle_partitions(self.spark), _LINEAGE_MAX_STRIPS)
         adj_edge_counts: dict[int, int] = {}
         if self.collect_lineage:
             for r in (
@@ -342,26 +385,29 @@ class ScatterGatherEngine:
 
         history: list[dict] = []
         start_iter = 1
-        state = None
-
+        # prime the algorithm's global scalars from the init/resume state;
+        # later iterations refresh them through set_stats below
+        prime = algo.needs_stats and bool(algo.extra_stats())
         if resumed is not None:
             latest, meta = resumed
             state = self.store.read_state(run_id, algo.name, latest)
             history = meta.get("history", [])
             start_iter = latest + 1
-
-        if state is None:
+            if prime:
+                # one aggregation job per resumed run
+                row = state.agg(*self._stats_aggs(state, algo)).collect()[0]
+                algo.set_stats(self._stats(row.asDict(), algo))
+        else:
             state = algo.init_state(vertices, adj)
+            if prime:
+                # rides the init-state checkpoint
+                state, init_obs = self._observe_stats(state, algo)
             if self.store is not None:
                 state = self.store.write_state(run_id, algo.name, 0, state, {"history": []})
             else:
                 state = self.mat.checkpoint(state)
-
-        if algo.needs_stats and algo.extra_stats():
-            # prime the algorithm's global scalars from the init/resume
-            # state (one extra job per RUN, not per iteration); subsequent
-            # iterations reuse the regular stats job via set_stats below
-            algo.set_stats(self._stats(state, algo))
+            if prime:
+                algo.set_stats(self._stats(observed(init_obs, f"{algo.name} init stats"), algo))
 
         prev_active = None
         converged = False
@@ -390,7 +436,6 @@ class ScatterGatherEngine:
             msgs = algo.messages(active, adj)
 
             total_msgs = 0
-            obs = None
             if self.collect_lineage:
                 # lineage measures SCATTER-side (map) strip counts — the
                 # strip metric FOG records and the one hub salting
@@ -398,19 +443,24 @@ class ScatterGatherEngine:
                 # single pass over msgs (CollectMetricsExec accumulators,
                 # merged driver-side): no persist of an edge-sized frame,
                 # no second compute of the scatter join. Safe because
-                # every algo's gather consumes msgs exactly once.
-                from pyspark.sql import Observation
-
-                obs = Observation()
+                # every algo's gather consumes msgs exactly once. Caveat:
+                # this node sits in a shuffle-map stage, so a retried
+                # stage re-runs its tasks and the counts can come out
+                # doubled; the stats below observe the result stage.
+                msg_obs = Observation()
                 strip = F.pmod(F.spark_partition_id(), F.lit(n_strips))
                 exprs = [F.count(F.lit(1)).alias("_mc_total")] + [
                     F.count_if(strip == i).alias(f"_mc_{i}")
                     for i in range(n_strips)
                 ]
-                msgs = msgs.observe(obs, *exprs)
+                msgs = msgs.observe(msg_obs, *exprs)
 
             gathered = algo.gather(msgs)
             new_state = algo.apply(base, gathered.drop("_n_msgs"))
+            if algo.needs_stats:
+                # the observe node is the plan's root, so the checkpoint
+                # job's result stage gathers the stats: no stats job
+                new_state, stats_obs = self._observe_stats(new_state, algo)
 
             durable = (
                 self.store is not None
@@ -421,8 +471,7 @@ class ScatterGatherEngine:
             # O(1) — a persist chain re-analyzes the whole history and a
             # raw chain recomputes ancestors exponentially, both measured
             # slower) and caches the state (MEMORY_AND_DISK, spillable).
-            # The stats agg then scans only the checkpointed RDD. The
-            # previous iteration's blocks are reclaimed through the
+            # The previous iteration's blocks are reclaimed through the
             # Materializer (plain DataFrame.unpersist is a no-op for
             # checkpoint-backed frames — leaked copies were measured to
             # cost 5x throughput by iteration ~5 via eviction/recompute).
@@ -434,9 +483,7 @@ class ScatterGatherEngine:
             self.mat.free(prev_state)
             parts: list[tuple[int, int]] = []
             if self.collect_lineage:
-                # the checkpoint/write action above evaluated msgs, so
-                # the metrics are final; Observation.get does not block
-                vals = obs.get
+                vals = observed(msg_obs, f"{algo.name} iteration {it} lineage")
                 total_msgs = int(vals["_mc_total"] or 0)
                 parts = [
                     (i, int(vals[f"_mc_{i}"]))
@@ -444,7 +491,7 @@ class ScatterGatherEngine:
                     if vals[f"_mc_{i}"]
                 ]
             if algo.needs_stats:
-                stats = self._stats(new_state, algo)
+                stats = self._stats(observed(stats_obs, f"{algo.name} iteration {it} stats"), algo)
                 algo.set_stats(stats)
             else:
                 stats = {"vertex_count": None, "active_count": None, "max_delta": None}
@@ -500,19 +547,29 @@ class ScatterGatherEngine:
             run_id, algo.name, it, {"converged": converged, "history": history}
         )
 
-    def _stats(self, state: DataFrame, algo: Algorithm | None = None) -> dict[str, Any]:
-        aggs = [F.count("*").alias("n"), F.sum(F.col("_active").cast("long")).alias("na")]
+    @staticmethod
+    def _stats_aggs(state: DataFrame, algo: Algorithm) -> list:
+        aggs = [F.count(F.lit(1)).alias("n"), F.sum(F.col("_active").cast("long")).alias("na")]
         if "_delta" in state.columns:
             aggs.append(F.max("_delta").alias("md"))
-        extras = algo.extra_stats() if algo is not None else {}
-        for name, col in extras.items():
+        for name, col in algo.extra_stats().items():
             aggs.append(col.alias(f"_x_{name}"))
-        row = state.agg(*aggs).collect()[0]
+        return aggs
+
+    def _observe_stats(self, state: DataFrame, algo: Algorithm) -> tuple[DataFrame, Observation]:
+        """``state`` with the convergence stats observed at its root; the
+        next action over it gathers them."""
+        obs = Observation()
+        return state.observe(obs, *self._stats_aggs(state, algo)), obs
+
+    @staticmethod
+    def _stats(vals: dict[str, Any], algo: Algorithm) -> dict[str, Any]:
+        """The stats dict from the values of :meth:`_stats_aggs`."""
         out = {
-            "vertex_count": int(row["n"]),
-            "active_count": int(row["na"] or 0),
-            "max_delta": float(row["md"]) if "_delta" in state.columns and row["md"] is not None else None,
+            "vertex_count": int(vals["n"]),
+            "active_count": int(vals["na"] or 0),
+            "max_delta": float(vals["md"]) if vals.get("md") is not None else None,
         }
-        for name in extras:
-            out[name] = row[f"_x_{name}"]
+        for name in algo.extra_stats():
+            out[name] = vals[f"_x_{name}"]
         return out

@@ -106,6 +106,54 @@ def test_resume_equals_uninterrupted(spark, tmp_path):
     assert resumed.history[0]["iteration"] == 4 or len(resumed.history) == 6
 
 
+def test_replayed_iteration_lineage_is_not_duplicated(spark, tmp_path):
+    """checkpoint_every=2 over 3 iterations commits iterations 2 and 3.
+    With iteration 3's commit marker gone, resume replays iteration 3:
+    its lineage rows must replace the first attempt's, not add to them."""
+    import os
+
+    edges, n = GX.ALL_GRAPHS["two_triangles"]
+    e = make_edges_df(spark, edges)
+    full = ScatterGatherEngine(spark, checkpoint_dir=str(tmp_path / "a")).run(
+        FogPageRank(niters=3), e, run_id="r", vertices=_vertices(spark, n)
+    )
+    root = str(tmp_path / "b")
+    ScatterGatherEngine(spark, checkpoint_dir=root, checkpoint_every=2).run(
+        FogPageRank(niters=3), e, run_id="r", vertices=_vertices(spark, n)
+    )
+    os.remove(os.path.join(root, "r", "fog_pagerank", "iter=00003", "_meta.json"))
+    eng = ScatterGatherEngine(spark, checkpoint_dir=root, checkpoint_every=2)
+    assert eng.store.latest_complete("r", "fog_pagerank") == 2
+    resumed = eng.run(FogPageRank(niters=3), e, run_id="r", vertices=_vertices(spark, n))
+    assert resumed.iterations == 3
+    lin = eng.store.read_lineage().collect()
+    keys = [(r["iteration"], r["partition_id"]) for r in lin]
+    assert len(keys) == len(set(keys)), sorted(keys)
+    per_iter: dict[int, int] = {}
+    for r in lin:
+        per_iter[r["iteration"]] = per_iter.get(r["iteration"], 0) + r["message_count"]
+    assert per_iter == {1: len(edges), 2: len(edges), 3: len(edges)}
+    a = {r["id"]: r["rank"] for r in full.state.collect()}
+    b = {r["id"]: r["rank"] for r in resumed.state.collect()}
+    assert a == b
+
+
+def test_shuffle_partitions_falls_back_on_non_integer_conf():
+    from types import SimpleNamespace
+
+    from fog_spark.plans.engine import shuffle_partitions
+
+    def stub(value):
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=lambda key: value),
+            sparkContext=SimpleNamespace(defaultParallelism=3),
+        )
+
+    assert shuffle_partitions(stub("16")) == 16
+    assert shuffle_partitions(stub("auto")) == 3
+    assert shuffle_partitions(stub(None)) == 3
+
+
 def test_standard_pagerank_resume(spark, tmp_path):
     """Resume must not depend on driver-held state (init_state is skipped
     on the resume path — the round-1 self._n TypeError regression)."""
